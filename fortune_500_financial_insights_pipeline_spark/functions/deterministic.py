@@ -62,7 +62,3 @@ def dsum_decimal(c: Column | str) -> Column:
 # oracle side either; the final double cast matches Spark's.
 def sql_dsum(expr: str) -> str:
     return f"(CAST(SUM(CAST(ROUND(({expr}) * 1000000) AS BIGINT)) AS DOUBLE) / 1000000)"
-
-
-def sql_davg(expr: str) -> str:
-    return f"(CAST(SUM(CAST(ROUND(({expr}) * 1000000) AS BIGINT)) AS DOUBLE) / 1000000) / COUNT({expr})"

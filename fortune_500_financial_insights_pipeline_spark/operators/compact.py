@@ -32,6 +32,21 @@ def estimate_bytes(df: DataFrame, sample_rows: int = 1000) -> int:
     return int(n * avg)
 
 
+def collect_if_small(df: DataFrame, cap: int):
+    """The driver-finish gate: ``df`` as a pandas frame when it has at most
+    ``cap`` rows, else None. ONE ``limit(cap + 1).toPandas()`` job both
+    decides and fetches, so driver memory is bounded by ``cap`` rows and
+    the small path pays no separate count or checkpoint job. Over the cap
+    the fetched rows are discarded and the caller runs its distributed
+    path (cut its lineage there, not before the gate). ``cap == 0``
+    returns None without starting a job. The transfer goes through Arrow,
+    primitive columns rather than Row objects."""
+    if not cap:
+        return None
+    pdf = df.limit(cap + 1).toPandas()
+    return pdf if len(pdf) <= cap else None
+
+
 def compact_for_write(
     df: DataFrame,
     target_bytes: int = DEFAULT_TARGET_BYTES,

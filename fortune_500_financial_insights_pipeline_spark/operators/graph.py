@@ -24,6 +24,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql import Window as W
 
+from fortune_500_financial_insights_pipeline_spark.operators.compact import collect_if_small
+
 
 def union_find_min_labels(pairs) -> dict:
     """Pure union-find with union-by-min over an iterable of (u, v)
@@ -52,16 +54,12 @@ def union_find_min_labels(pairs) -> dict:
     return {x: find(x) for x in parent}
 
 
-def _cc_local_union_find(e: DataFrame, pdf=None) -> DataFrame:
-    """Bounded driver-side finish over a collected edge list (see
+def _cc_local_union_find(e: DataFrame, pdf) -> DataFrame:
+    """Bounded driver-side finish over the edge list ``pdf`` that the
+    gate (compact.collect_if_small) already fetched from ``e`` (see
     union_find_min_labels for the labeling invariant). Memory is bounded
-    by the caller's edge-count threshold (two ids per edge, transferred
-    via Arrow as primitive columns — not Row objects), the same class as
-    the repo's other bounded collect sites. ``pdf`` lets the caller pass
-    an already-collected pandas frame so the edges are fetched once."""
-    labels = union_find_min_labels(
-        (u, v) for u, v in (e.toPandas() if pdf is None else pdf).values.tolist()
-    )
+    by the caller's edge-count threshold."""
+    labels = union_find_min_labels(pdf.values.tolist())
     # id type must match what the distributed path would produce: its
     # first step unions e with the column-swapped frame, which widens
     # mixed src/dst types (int ∪ long → long). Take the type from the
@@ -89,10 +87,11 @@ def connected_components(
 
     Two-phase execution, the standard shape for CC at scale (Kiveris et
     al. run distributed rounds only until the frame is small, then finish
-    locally): the deduplicated edge list is counted once, and when it is
-    at most ``local_finish_edges`` (a few MB of driver memory — candidate
-    graphs from bucketed near-dup pair generation are tiny relative to
-    the corpus) the labels come from a driver-side union-find with
+    locally): one bounded job (compact.collect_if_small) fetches the
+    deduplicated edge list when it has at most ``local_finish_edges``
+    edges (a few MB of driver memory — candidate graphs from bucketed
+    near-dup pair generation are tiny relative to the corpus), and the
+    labels then come from a driver-side union-find with
     union-by-min, which produces the IDENTICAL min-id labels without
     paying O(diameter) shuffle rounds. Above the threshold — or with
     ``local_finish_edges=0`` — the distributed min-label propagation
@@ -113,16 +112,9 @@ def connected_components(
         .where(F.col("u").isNotNull() & F.col("v").isNotNull())
         .distinct()
     )
-    if local_finish_edges:
-        # ONE job decides the path AND fetches the edges (round 10 —
-        # guide §1.2 per-task work: the old shape paid three jobs here,
-        # an eager checkpoint materialization + a count + a toPandas;
-        # limit(cap+1) bounds driver memory exactly like the count gate
-        # did — if the cap is exceeded we fall back to the distributed
-        # loop and only then pay the checkpoint it needs).
-        pdf = e.limit(local_finish_edges + 1).toPandas()
-        if len(pdf) <= local_finish_edges:
-            return _cc_local_union_find(e, pdf)
+    pdf = collect_if_small(e, local_finish_edges)
+    if pdf is not None:
+        return _cc_local_union_find(e, pdf)
     e = e.localCheckpoint()
     both = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     both = both.distinct().localCheckpoint()

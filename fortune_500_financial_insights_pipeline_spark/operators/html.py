@@ -43,11 +43,6 @@ BLOCK_TAGS = {
 }
 SKIP_TAGS = {"script", "style"}
 
-BLOCKS_SCHEMA = (
-    "doc_id long, block_idx int, tag string, text string, n_chars int, "
-    "n_links int, link_chars int"
-)
-
 MAIN_SCHEMA = (
     "doc_id long, n_blocks int, n_kept int, main_chars int, main_md5 string"
 )
@@ -117,32 +112,6 @@ def parse_blocks(html: str) -> list[dict]:
     p.feed(html)
     p.close()
     return p.finish()
-
-
-def html_blocks(
-    df: DataFrame, id_col: str = "doc_id", html_col: str = "html"
-) -> DataFrame:
-    """One row per text block: (doc, block_idx, tag, text, n_chars,
-    n_links, link_chars) — the raw material for any boilerplate rule."""
-
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "block_idx": [], "tag": [], "text": [],
-                   "n_chars": [], "n_links": [], "link_chars": []}
-            for doc_id, page in zip(pdf["doc_id"], pdf["__html"]):
-                for i, b in enumerate(parse_blocks(page)):
-                    out["doc_id"].append(doc_id)
-                    out["block_idx"].append(i)
-                    out["tag"].append(b["tag"])
-                    out["text"].append(b["text"])
-                    out["n_chars"].append(len(b["text"]))
-                    out["n_links"].append(b["n_links"])
-                    out["link_chars"].append(b["link_chars"])
-            yield pd.DataFrame(out)
-
-    return df.select(
-        df[id_col].alias("doc_id"), df[html_col].alias("__html")
-    ).mapInPandas(walk, schema=BLOCKS_SCHEMA)
 
 
 def html_main_text(

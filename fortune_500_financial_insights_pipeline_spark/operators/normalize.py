@@ -113,12 +113,10 @@ def weighted_median(
     * round 10: same with a FIXED bucket width (drops the stats pass; two
       scans total) — 0.99 → 1.56 s.
 
-    The fixed-width two-level form is kept below as
-    :func:`weighted_median_histogram` (equivalence-pinned by test): it is
-    the right shape once rows-per-group is large enough that the
-    single-task sort dominates two map-side-aggregated scans — at the
-    100 TB design point switch callers to it; at bench scale the window
-    form measures faster and stays the default.
+    The two-level histogram form is the right shape only once
+    rows-per-group is large enough that the single-task sort dominates
+    two map-side-aggregated scans; no caller reaches that scale, so it is
+    not kept.
     """
     w_ord = W.partitionBy(*group_cols).orderBy(value_col)
     cumw = F.sum(F.col(weight_col).cast("long")).over(
@@ -132,88 +130,4 @@ def weighted_median(
         .where(F.col("__cw") * 2 >= F.col("__tw"))
         .groupBy(*group_cols)
         .agg(F.min(value_col).alias(out_col))
-    )
-
-
-def weighted_median_histogram(
-    df: DataFrame,
-    group_cols: list[str],
-    value_col: str,
-    weight_col: str,
-    out_col: str = "w_median",
-    bucket_bits: int = 13,
-) -> DataFrame:
-    """:func:`weighted_median` computed by two-level selection on a
-    fixed-width value-bucket histogram — identical output (pinned by
-    test_weighted_median_histogram_matches_window), different scale shape:
-    no per-group full sort ever materializes, so a group with billions of
-    rows costs two map-side-aggregated scans plus a sort of ONE bucket
-    (~rows/2^bucket_bits) instead of a single-task sort of the whole
-    group.  Measured SLOWER at sf0.1 (0.99 → 1.56 s — the second scan
-    outweighs a 200k-row sort); use it when rows-per-group is large
-    enough to invert that trade.
-
-    The bucket id (floor(v / 2^bucket_bits) via double division) only
-    needs to be monotone non-decreasing in the value — buckets partition
-    the value ORDER, exact weights ride the long sums — so double
-    rounding at extreme magnitudes cannot change the result.  NULL values
-    sort first (null bucket), exactly like the window form: if the
-    crossing lands inside the null bucket, every non-null row satisfies
-    2·cumw >= totw, so the answer is the min non-null value — the scan
-    branch then selects the first non-null bucket with no cum condition.
-    """
-    wdt = float(1 << bucket_bits)
-    base = df.select(
-        *group_cols, F.col(value_col).alias("__v"),
-        F.col(weight_col).cast("long").alias("__w"),
-    )
-    b = F.when(F.col("__v").isNull(), F.lit(None).cast("long")).otherwise(
-        F.floor(F.col("__v").cast("double") / wdt).cast("long")
-    )
-    rows = base.withColumn("__b", b)
-    hist = rows.groupBy(*group_cols, "__b").agg(F.sum("__w").alias("__bw"))
-    wg = W.partitionBy(*group_cols).orderBy(F.asc_nulls_first("__b"))
-    cum = F.sum("__bw").over(wg.rowsBetween(W.unboundedPreceding, 0))
-    before = F.coalesce(
-        F.sum("__bw").over(wg.rowsBetween(W.unboundedPreceding, -1)),
-        F.lit(0).cast("long"),
-    )
-    tot = F.sum("__bw").over(W.partitionBy(*group_cols))
-    fnn = F.min(F.when(F.col("__b").isNotNull(), F.col("__b"))).over(
-        W.partitionBy(*group_cols)
-    )
-    hb = hist.select(
-        *group_cols, "__b", cum.alias("__cum"), before.alias("__cb"),
-        tot.alias("__tot"), fnn.alias("__fnn"),
-    )
-    crossing = (
-        hb.where(F.col("__cum") * 2 >= F.col("__tot"))
-        .groupBy(*group_cols)
-        .agg(
-            F.min(
-                F.struct(
-                    F.col("__b").alias("b"), F.col("__cb").alias("cb"),
-                    F.col("__tot").alias("tot"), F.col("__fnn").alias("fnn"),
-                )
-            ).alias("__m")
-        )
-        .select(
-            *group_cols,
-            F.coalesce(F.col("__m.b"), F.col("__m.fnn")).alias("__tb"),
-            F.col("__m.b").isNull().alias("__nullcross"),
-            F.col("__m.cb").alias("__cb"),
-            F.col("__m.tot").alias("__tot"),
-        )
-    )
-    reg = rows.join(F.broadcast(crossing), group_cols).where(
-        F.col("__b") == F.col("__tb")
-    )
-    w_in = W.partitionBy(*group_cols).orderBy("__v").rowsBetween(
-        W.unboundedPreceding, 0
-    )
-    return (
-        reg.withColumn("__cw", F.col("__cb") + F.sum("__w").over(w_in))
-        .where(F.col("__nullcross") | (F.col("__cw") * 2 >= F.col("__tot")))
-        .groupBy(*group_cols)
-        .agg(F.min("__v").alias(out_col))
     )

@@ -15,9 +15,11 @@ scale 1e9 (pinned against a sequential Python replay of the identical
 integer recurrence in tests).
 
 Spark-idiomatic iteration, same scaffold as graph.connected_components:
-one shuffle per round (contribution groupBy), out-degrees computed once
-and re-joined each round, lineage cut with localCheckpoint so the plan
-stays O(1) deep. Fixed iteration count (no convergence collect) keeps
+one shuffle per round (contribution groupBy), out-degrees folded into the
+edge table once, lineage cut with localCheckpoint every round so the plan
+stays O(1) deep. ``pagerank`` is the every-node-is-a-seed case of the one
+seeded recurrence ``personalized_pagerank`` runs, on both the distributed
+and the driver-side path. Fixed iteration count (no convergence collect) keeps
 every round's job identical — at 100 TB you want 10 predictable
 shuffle rounds, not a driver round-trip deciding a data-dependent 11th.
 Dangling mass (sinks) is DROPPED, not redistributed: a sink's rank
@@ -36,34 +38,31 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from fortune_500_financial_insights_pipeline_spark.operators.compact import collect_if_small
+
 RANK_SCALE = 1_000_000_000  # fixed-point: 9 fractional digits
 
 # Fixed-round rank iterations are overhead-bound, not data-bound, on small
 # graphs: every round costs a constant few shuffle stages regardless of row
-# count. Below this edge-count threshold the operators run the IDENTICAL
+# count. At or below this edge count the operators run the IDENTICAL
 # integer recurrence driver-side (vectorized int64 numpy — same floor
 # division, same fixed-point fold, bit-equal results pinned by test) after
-# one bounded collect, the same two-phase shape as
+# the one-job gate compact.collect_if_small, the same two-phase shape as
 # graph.connected_components. Above it — or with the threshold set to 0 —
 # the distributed loop runs unchanged; at the 100 TB design point the
 # distributed form is the real path and the threshold is never reached.
 LOCAL_EDGE_THRESHOLD = 500_000
 
 
-def _collect_edges_if_small(e: DataFrame, threshold: int):
-    """One bounded size probe on a checkpointed frame: returns the edge
-    list as plain-python (u, v) pairs when the graph is under
-    ``threshold`` edges, else None. The count() reuses the checkpoint
-    blocks the loop needs anyway, so the probe costs one cheap job; the
-    transfer itself goes through Arrow (toPandas) — two primitive
-    columns, ~16 bytes/edge — instead of driver-side Row objects, which
-    cost ~50× that and would make the threshold a memory hazard rather
-    than a footnote."""
-    if not threshold:
-        return None
-    if e.count() > threshold:
-        return None
-    return e.toPandas().values.tolist()
+def _rank_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Distinct (src, dst) edges. A NULL endpoint is not a vertex: it is
+    dropped before the gate, so both paths see the same graph and the
+    driver twins never get pandas' NaN-coerced float ids."""
+    return (
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
+        .distinct()
+    )
 
 
 def _rank_recurrence_local(
@@ -195,7 +194,6 @@ def pagerank(
     *,
     damping: float = 0.85,
     max_iter: int = 10,
-    checkpoint_every: int = 1,
     local_threshold_edges: int = LOCAL_EDGE_THRESHOLD,
 ) -> DataFrame:
     """(node, rank_fp) over the directed ``edges``; rank_fp is the
@@ -203,77 +201,12 @@ def pagerank(
     On sink-free graphs ranks sum to ~RANK_SCALE * n_nodes (floor-division
     leakage aside); with sinks the dangling mass is dropped each round, so
     totals are a lower bound (see module docstring). Every node appearing
-    as src or dst is a vertex. Graphs under ``local_threshold_edges``
-    run the identical integer recurrence driver-side (see
-    LOCAL_EDGE_THRESHOLD; results are bit-equal by test).
+    as src or dst is a vertex, and every vertex is a seed of
+    :func:`personalized_pagerank`'s recurrence. Graphs of at most
+    ``local_threshold_edges`` edges run the identical integer recurrence
+    driver-side (see LOCAL_EDGE_THRESHOLD; results are bit-equal by test).
     """
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .distinct()
-        .localCheckpoint()
-    )
-    rows = _collect_edges_if_small(e, local_threshold_edges)
-    if rows is not None:
-        return _rank_recurrence_local(
-            e.sparkSession, rows, e.schema[0].dataType, damping, max_iter
-        )
-
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    # fold out-degree into the edge table once — inside the loop each
-    # round then needs exactly one join (ranks) and one groupBy, not a
-    # second degree join per iteration
-    w_deg = F.count("*").over(Window.partitionBy("src"))
-    e = e.select("src", "dst", w_deg.alias("out_deg")).localCheckpoint()
-
-    # damping as an exact fixed-point fraction: d_num/DENOM, applied in
-    # integer arithmetic (x * d_num) // DENOM — deterministic, no doubles
-    DENOM = 1000
-    d_num = int(round(damping * DENOM))
-
-    ranks = nodes.select("node", F.lit(RANK_SCALE).cast("long").alias("rank_fp"))
-    teleport = F.lit((DENOM - d_num) * RANK_SCALE // DENOM).cast("long")
-
-    # all integral arithmetic uses SQL `div` (exact long division) — the
-    # Column `/` operator routes longs through doubles, which stops being
-    # exact past 2^53 and would break bit-determinism on huge graphs.
-    # (in_sum * d_num) div DENOM is computed as the algebraically equal
-    # (in_sum div DENOM) * d_num + ((in_sum % DENOM) * d_num) div DENOM
-    # so the product never overflows long.
-    damped = (
-        f"(in_sum DIV {DENOM}) * {d_num}"
-        f" + ((in_sum % {DENOM}) * {d_num}) DIV {DENOM}"
-    )
-    for i in range(max_iter):
-        contribs = (
-            e.join(ranks, e.src == ranks.node)
-            .select(
-                F.col("dst").alias("node"),
-                F.expr("rank_fp DIV out_deg").alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("in_sum"))
-        )
-        ranks = (
-            nodes.join(contribs, "node", "left")
-            .select(
-                "node",
-                F.coalesce("in_sum", F.lit(0).cast("long")).alias("in_sum"),
-            )
-            .select("node", (teleport + F.expr(damped)).alias("rank_fp"))
-        )
-        # default: cut lineage every round. Measured at sf0.01 local:
-        # checkpoint_every=3 was ~1.5x SLOWER — the stacked unplanned
-        # rounds cost more in optimizer/plan work than the saved job
-        # launches. The knob stays for giant graphs where a
-        # materialization is genuinely expensive.
-        if (i + 1) % checkpoint_every == 0 or i == max_iter - 1:
-            ranks = ranks.localCheckpoint()
-    return ranks
+    return _seeded_rank(edges, None, src, dst, damping, max_iter, local_threshold_edges)
 
 
 def personalized_pagerank(
@@ -285,7 +218,6 @@ def personalized_pagerank(
     *,
     damping: float = 0.85,
     max_iter: int = 10,
-    checkpoint_every: int = 1,
     local_threshold_edges: int = LOCAL_EDGE_THRESHOLD,
 ) -> DataFrame:
     """Personalized PageRank: the same bit-exact integer recurrence as
@@ -295,38 +227,61 @@ def personalized_pagerank(
     start with full rank, everything else at 0; each round is one join +
     one groupBy, ``DIV``-exact, so the oracle unrolls identically.
     Small graphs take the driver-side twin (LOCAL_EDGE_THRESHOLD)."""
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .distinct()
-        .localCheckpoint()
-    )
-    rows = _collect_edges_if_small(e, local_threshold_edges)
-    if rows is not None:
-        seed_set = {
-            r[0] for r in seeds.select(F.col(seed_col).alias("node")).distinct().collect()
-        }
+    seeds = seeds.select(F.col(seed_col).alias("node")).distinct()
+    return _seeded_rank(edges, seeds, src, dst, damping, max_iter, local_threshold_edges)
+
+
+def _seeded_rank(
+    edges: DataFrame,
+    seeds: DataFrame | None,
+    src: str,
+    dst: str,
+    damping: float,
+    max_iter: int,
+    local_threshold_edges: int,
+) -> DataFrame:
+    """The seeded rank recurrence behind both public functions: seeds
+    (distinct ``node`` rows; None = every node) start at RANK_SCALE and
+    receive the teleport term, all other nodes start at 0 and get none."""
+    e = _rank_edges(edges, src, dst)
+    pdf = collect_if_small(e, local_threshold_edges)
+    if pdf is not None:
+        seed_set = None if seeds is None else {r[0] for r in seeds.collect()}
         return _rank_recurrence_local(
-            e.sparkSession, rows, e.schema[0].dataType, damping, max_iter,
-            seed_set=seed_set,
+            e.sparkSession, pdf.values.tolist(), e.schema[0].dataType,
+            damping, max_iter, seed_set=seed_set,
         )
+    e = e.localCheckpoint()
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
     )
-    seed_n = seeds.select(F.col(seed_col).alias("node")).distinct()
-    nodes = (
-        nodes.join(seed_n.withColumn("__s", F.lit(1)), "node", "left")
-        .select("node", F.coalesce("__s", F.lit(0)).alias("is_seed"))
-        .localCheckpoint()
-    )
-    w_deg = Window.partitionBy("src")
-    e = e.select("src", "dst", F.count("*").over(w_deg).alias("out_deg")).localCheckpoint()
+    if seeds is None:
+        nodes = nodes.withColumn("is_seed", F.lit(1))
+    else:
+        nodes = nodes.join(seeds.withColumn("__s", F.lit(1)), "node", "left").select(
+            "node", F.coalesce("__s", F.lit(0)).alias("is_seed")
+        )
+    nodes = nodes.localCheckpoint()
+    # fold out-degree into the edge table once — inside the loop each
+    # round then needs exactly one join (ranks) and one groupBy, not a
+    # second degree join per iteration
+    w_deg = F.count("*").over(Window.partitionBy("src"))
+    e = e.select("src", "dst", w_deg.alias("out_deg")).localCheckpoint()
 
+    # damping as an exact fixed-point fraction: d_num/DENOM, applied in
+    # integer arithmetic (x * d_num) // DENOM — deterministic, no doubles
     DENOM = 1000
     d_num = int(round(damping * DENOM))
     tp_val = (DENOM - d_num) * RANK_SCALE // DENOM
     teleport = F.when(F.col("is_seed") == 1, F.lit(tp_val)).otherwise(0).cast("long")
+    # all integral arithmetic uses SQL `div` (exact long division) — the
+    # Column `/` operator routes longs through doubles, which stops being
+    # exact past 2^53 and would break bit-determinism on huge graphs.
+    # (in_sum * d_num) div DENOM is computed as the algebraically equal
+    # (in_sum div DENOM) * d_num + ((in_sum % DENOM) * d_num) div DENOM
+    # so the product never overflows long.
     damped = (
         f"(in_sum DIV {DENOM}) * {d_num}"
         f" + ((in_sum % {DENOM}) * {d_num}) DIV {DENOM}"
@@ -337,7 +292,7 @@ def personalized_pagerank(
         .cast("long")
         .alias("rank_fp"),
     )
-    for i in range(max_iter):
+    for _ in range(max_iter):
         contribs = (
             e.join(ranks, e.src == ranks.node)
             .select(
@@ -347,6 +302,10 @@ def personalized_pagerank(
             .groupBy("node")
             .agg(F.sum("c").alias("in_sum"))
         )
+        # lineage is cut every round: measured at sf0.01 local, cutting
+        # every third round was ~1.5x SLOWER — the stacked unplanned
+        # rounds cost more in optimizer/plan work than the saved job
+        # launches
         ranks = (
             nodes.join(contribs, "node", "left")
             .select(
@@ -355,9 +314,8 @@ def personalized_pagerank(
                 F.coalesce("in_sum", F.lit(0).cast("long")).alias("in_sum"),
             )
             .select("node", (teleport + F.expr(damped)).alias("rank_fp"))
+            .localCheckpoint()
         )
-        if (i + 1) % checkpoint_every == 0 or i == max_iter - 1:
-            ranks = ranks.localCheckpoint()
     return ranks
 
 
@@ -380,14 +338,13 @@ def hits(
     max broadcast."""
     from fortune_500_financial_insights_pipeline_spark.functions.deterministic import dsum
 
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .distinct()
-        .localCheckpoint()
-    )
-    rows = _collect_edges_if_small(e, local_threshold_edges)
-    if rows is not None:
-        return _hits_local(e.sparkSession, rows, e.schema[0].dataType, max_iter)
+    e = _rank_edges(edges, src, dst)
+    pdf = collect_if_small(e, local_threshold_edges)
+    if pdf is not None:
+        return _hits_local(
+            e.sparkSession, pdf.values.tolist(), e.schema[0].dataType, max_iter
+        )
+    e = e.localCheckpoint()
     hubs = e.select(F.col("src").alias("node")).distinct().withColumn(
         "h", F.lit(1.0)
     ).localCheckpoint(eager=False)

@@ -154,19 +154,6 @@ def sample_centroids(emb: DataFrame, k: int, vec_col: str = "embedding",
     return [list(map(float, r[1])) for r in rows]
 
 
-def _nearest_cell(vec_col: str, centroids: list[list[float]]) -> Column:
-    """Index of the nearest centroid, computed JVM-side: cosine against each
-    centroid literal, argmax via array_position(max)."""
-    sims = F.array(
-        *[
-            _dot(F.col(vec_col), F.array(*[F.lit(x) for x in c]))
-            / (_norm(F.col(vec_col)) * F.lit(math.sqrt(sum(x * x for x in c)) or 1.0))
-            for c in centroids
-        ]
-    )
-    return (F.array_position(sims, F.array_max(sims)) - 1).cast("int")
-
-
 def ivf_index(emb: DataFrame, centroids: list[list[float]],
               vec_col: str = "embedding", vectorized: bool = False) -> DataFrame:
     """Attach the IVF cell id. Persist partitioned/bucketed by ``cell`` so a

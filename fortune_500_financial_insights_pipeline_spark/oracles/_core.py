@@ -7,14 +7,11 @@ from __future__ import annotations
 
 from fortune_500_financial_insights_pipeline_spark.operators.rproj import sign_entry as _rp_sign
 from fortune_500_financial_insights_pipeline_spark.checks import BENFORD_EXPECTED as _BF
+from fortune_500_financial_insights_pipeline_spark.functions.deterministic import sql_dsum as _dsum
 import math as _math
 
 ORACLES: dict[str, str] = {}
 
-DSUM = "(CAST(SUM(CAST(ROUND(({e}) * 1000000) AS BIGINT)) AS DOUBLE) / 1000000)"
-
-def _dsum(e: str) -> str:
-    return DSUM.format(e=e)
 
 def _pagerank_oracle(iters: int = 10, d_num: int = 850, denom: int = 1000,
                      scale: int = 1_000_000_000) -> str:

@@ -35,12 +35,3 @@ def sustainability_pipeline(
         )
         return flatten_sustainability(raw, keep=["Ticker"])
     return flatten_sustainability(raw)
-
-
-def write_jsonl(df: DataFrame, path: str) -> None:
-    """NDJSON sink (the reference lands JSONL for BQ autodetect loads)."""
-    df.write.mode("overwrite").json(path)
-
-
-def write_parquet(df: DataFrame, path: str) -> None:
-    df.write.mode("overwrite").parquet(path)

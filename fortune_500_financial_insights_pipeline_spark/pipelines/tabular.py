@@ -73,10 +73,6 @@ def to_warehouse_columns(df: DataFrame) -> DataFrame:
     return out
 
 
-def write_statements(df: DataFrame, path: str) -> None:
-    df.write.mode("overwrite").parquet(path)
-
-
 def publish_statements(df: DataFrame, base_path: str, table: str) -> str:
     """Write-audit-publish form of the statement load
     (warehouse.wap_publish): the wide frame stages under

@@ -25,6 +25,18 @@ from fortune_500_financial_insights_pipeline_spark.pipelines.open_close import o
 from fortune_500_financial_insights_pipeline_spark.plans.runner import Dag
 
 
+def _table_rows(spark: SparkSession, warehouse_path: str, table: str) -> int:
+    """Row count of a warehouse table, re-read from its written files."""
+    return spark.read.parquet(f"{warehouse_path}/{table}").count()
+
+
+def _land(spark: SparkSession, df, warehouse_path: str, table: str) -> int:
+    """Write ``df`` as warehouse table ``table``; a load task's output is
+    the row count re-read from the written files."""
+    WH.write_table(df, warehouse_path, table)
+    return _table_rows(spark, warehouse_path, table)
+
+
 def build_elt_dag(
     spark: SparkSession,
     kaggle_glob: str,
@@ -38,8 +50,7 @@ def build_elt_dag(
 
     def load_open_close() -> int:
         df = open_close(spark, kaggle_glob, api_glob, dedup=dedup)
-        WH.write_table(df, warehouse_path, "openclose")
-        return spark.read.parquet(f"{warehouse_path}/openclose").count()
+        return _land(spark, df, warehouse_path, "openclose")
 
     def load_info() -> int:
         df = info_pipeline(spark, info_glob).select(
@@ -53,8 +64,7 @@ def build_elt_dag(
             F.col("sector").alias("Sector"),
             F.current_date().alias("Date"),
         )
-        WH.write_table(df, warehouse_path, "metadata")
-        return spark.read.parquet(f"{warehouse_path}/metadata").count()
+        return _land(spark, df, warehouse_path, "metadata")
 
     def load_sustainability() -> int:
         df = sustainability_pipeline(spark, sustainability_glob, with_ticker=True).select(
@@ -71,8 +81,7 @@ def build_elt_dag(
             F.col("esgPerformance").alias("ESGPerformance"),
             F.current_date().alias("Date"),
         )
-        WH.write_table(df, warehouse_path, "sustainability")
-        return spark.read.parquet(f"{warehouse_path}/sustainability").count()
+        return _land(spark, df, warehouse_path, "sustainability")
 
     dag.add("transform_open_close", load_open_close, retries=1)
     dag.add("transform_info", load_info, retries=1)
@@ -111,35 +120,22 @@ def build_api_entities_dag(
 
     def load_dividends() -> int:
         df = dividends(spark, dividends_glob)
-        WH.write_table(df, warehouse_path, "dividend_history")
-        return spark.read.parquet(f"{warehouse_path}/dividend_history").count()
+        return _land(spark, df, warehouse_path, "dividend_history")
 
     def load_recs() -> int:
         df = analyst_recommendations(spark, recs_glob)
-        WH.write_table(
-            WH.add_surrogate_key(df, ["Ticker", "Date", "Period"]),
-            warehouse_path,
-            "analystreccomendations",
-        )
-        return spark.read.parquet(f"{warehouse_path}/analystreccomendations").count()
+        df = WH.add_surrogate_key(df, ["Ticker", "Date", "Period"])
+        return _land(spark, df, warehouse_path, "analystreccomendations")
 
     def load_estimates() -> int:
         df = earnings_estimates(spark, estimates_glob, as_of=as_of)
-        WH.write_table(
-            WH.add_surrogate_key(df, ["Ticker", "Period", "Date"]),
-            warehouse_path,
-            "earnings_estimates",
-        )
-        return spark.read.parquet(f"{warehouse_path}/earnings_estimates").count()
+        df = WH.add_surrogate_key(df, ["Ticker", "Period", "Date"])
+        return _land(spark, df, warehouse_path, "earnings_estimates")
 
     def load_options() -> int:
         df = options_chain(spark, options_glob, as_of=as_of)
-        WH.write_table(
-            WH.add_surrogate_key(df, ["ContractSymbol", "Date"]),
-            warehouse_path,
-            "options_chain",
-        )
-        return spark.read.parquet(f"{warehouse_path}/options_chain").count()
+        df = WH.add_surrogate_key(df, ["ContractSymbol", "Date"])
+        return _land(spark, df, warehouse_path, "options_chain")
 
     dag.add("transform_dividends", load_dividends, retries=1)
     dag.add("transform_analyst_recs", load_recs, retries=1)
@@ -180,8 +176,7 @@ def build_statements_dag(
 
     def load_sheet(table: str) -> int:
         wide = statements_wide(spark, sheet_files[table], interest_items[table])
-        WH.write_table(to_warehouse_columns(wide), warehouse_path, table)
-        return spark.read.parquet(f"{warehouse_path}/{table}").count()
+        return _land(spark, to_warehouse_columns(wide), warehouse_path, table)
 
     for table in sheet_files:
         dag.add(f"transform_{table}", lambda t=table: load_sheet(t), retries=1)
@@ -219,7 +214,7 @@ def build_refresh_dag(
             .load()
         )
         WH.upsert_table(spark, warehouse_path, "openclose", feed, keys=["Ticker", "Date"])
-        return spark.read.parquet(f"{warehouse_path}/openclose").count()
+        return _table_rows(spark, warehouse_path, "openclose")
 
     dag.add("refresh_open_close", fetch_and_upsert, retries=1)
     dag.add("register_warehouse", lambda: WH.register(spark, warehouse_path),

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from fortune_500_financial_insights_pipeline_spark.catalog import load_table
 from fortune_500_financial_insights_pipeline_spark.functions.deterministic import davg, dsum, dsum_w
+from fortune_500_financial_insights_pipeline_spark.operators.compact import collect_if_small
 
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -43,12 +44,12 @@ def _memo_trained(key: tuple, build: Callable[[], object]):
 
 
 # Pair-list memo ceiling: above this many rows the memo is SKIPPED and the
-# distributed frame returned as-is — a degenerate corpus (boilerplate
-# floods) can make near-dup pair counts quadratic, and a memo must never
-# turn that into unbounded driver memory. Transfers go through Arrow
-# (toPandas) and the memo keeps the numpy-backed pandas frame, so the
-# footprint at the cap really is primitive-column sized (2M rows × four
-# int64 ≈ 64 MB) — not the ~50×-larger Row-object/tuple form.
+# distributed frame returned — a degenerate corpus (boilerplate floods)
+# can make near-dup pair counts quadratic, and a memo must never turn
+# that into unbounded driver memory. The gate is compact.collect_if_small
+# (one bounded Arrow fetch) and the memo keeps the numpy-backed pandas
+# frame, so the footprint at the cap really is primitive-column sized
+# (2M rows × four int64 ≈ 64 MB) — not the ~50×-larger Row-object form.
 _PAIR_MEMO_CAP = 2_000_000
 
 
@@ -89,10 +90,11 @@ def doc_jaccard_pairs(
             # near-dup-bounded corpus by memo contract (_PAIR_MEMO_CAP):
             # id-pair broadcast keeps the gram arrays off every exchange
             broadcast_cands=True,
-        ).localCheckpoint(eager=False)
-        if pairs.count() > _PAIR_MEMO_CAP:
-            return pairs  # degenerate corpus: stay distributed, skip the memo
-        _TRAINED_MEMO[key] = pairs.toPandas()  # Arrow: 4 primitive columns
+        )
+        pdf = collect_if_small(pairs, _PAIR_MEMO_CAP)
+        if pdf is None:  # degenerate corpus: stay distributed, skip the memo
+            return pairs.localCheckpoint(eager=False)
+        _TRAINED_MEMO[key] = pdf
     return spark.createDataFrame(
         _TRAINED_MEMO[key], "id_a long, id_b long, n_i long, n_u long"
     )
@@ -168,10 +170,11 @@ def doc_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs = minhash_neardup_pairs_portable(
             d, id_col="doc_id", text_col="text",
             n_hashes=16, bands=4, min_jaccard=0.0,
-        ).localCheckpoint(eager=False)
-        if pairs.count() > _PAIR_MEMO_CAP:
-            return pairs  # degenerate corpus: stay distributed, skip the memo
-        _TRAINED_MEMO[key] = pairs.toPandas()  # Arrow: 3 primitive columns
+        )
+        pdf = collect_if_small(pairs, _PAIR_MEMO_CAP)
+        if pdf is None:  # degenerate corpus: stay distributed, skip the memo
+            return pairs.localCheckpoint(eager=False)
+        _TRAINED_MEMO[key] = pdf
     return spark.createDataFrame(
         _TRAINED_MEMO[key], "id_a long, id_b long, jac double"
     )

@@ -12,11 +12,7 @@ where Spark stays at long.
 
 from __future__ import annotations
 
-DSUM = "(CAST(SUM(CAST(ROUND(({e}) * 1000000) AS BIGINT)) AS DOUBLE) / 1000000)"
-
-
-def _dsum(e: str) -> str:
-    return DSUM.format(e=e)
+from fortune_500_financial_insights_pipeline_spark.functions.deterministic import sql_dsum as _dsum
 
 
 REVENUE = _dsum("l_extendedprice * (1 - l_discount)")

@@ -23,3 +23,14 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMALL
+
+
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    """Make the default selection visible: pytest.ini deselects the tests
+    marked ``slow``, so say how many were left out and how to run them."""
+    n = len(terminalreporter.stats.get("deselected", []))
+    if n and "not slow" in (config.getoption("markexpr") or ""):
+        terminalreporter.write_line(
+            f"{n} tests deselected by the default '-m \"not slow\"'; "
+            "run the full suite with: python -m pytest tests/ -q -o addopts="
+        )

@@ -72,3 +72,35 @@ def test_cc_mixed_width_ids_widen_like_distributed(spark):
     assert {(r.id, r.comp) for r in local.collect()} == {
         (r.id, r.comp) for r in dist.collect()
     }
+
+
+def test_rank_operators_null_endpoints_dropped_both_paths(spark):
+    """pagerank / personalized_pagerank / hits drop NULL endpoints before
+    the driver-finish gate, like connected_components: the driver twin
+    must not see pandas' float-coerced ids, and the distributed loop must
+    not keep NULL as a vertex."""
+    from fortune_500_financial_insights_pipeline_spark.operators.pagerank import (
+        hits,
+        pagerank,
+        personalized_pagerank,
+    )
+
+    schema = "src long, dst long"
+    clean = spark.createDataFrame([(1, 2), (2, 3), (3, 1)], schema)
+    dirty = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (None, 2), (3, None)], schema
+    )
+    seeds = spark.createDataFrame([(1,)], "node long")
+    ops = {
+        "pagerank": lambda e, t: pagerank(e, max_iter=3, local_threshold_edges=t),
+        "ppr": lambda e, t: personalized_pagerank(
+            e, seeds, max_iter=3, local_threshold_edges=t
+        ),
+        "hits": lambda e, t: hits(e, max_iter=3, local_threshold_edges=t),
+    }
+    for name, op in ops.items():
+        want = sorted(map(tuple, op(clean, 0).collect()))
+        assert None not in {r[-2] for r in want}, name
+        for threshold in (0, 100):
+            got = sorted(map(tuple, op(dirty, threshold).collect()))
+            assert got == want, (name, threshold)

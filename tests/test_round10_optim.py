@@ -30,10 +30,9 @@ def _window_weighted_median(df, group_cols, value_col, weight_col, out="w_median
     )
 
 
-def test_weighted_median_histogram_matches_window(spark):
+def test_weighted_median_matches_window(spark):
     from fortune_500_financial_insights_pipeline_spark.operators.normalize import (
         weighted_median,
-        weighted_median_histogram,
     )
 
     rnd = random.Random(7)
@@ -43,22 +42,13 @@ def test_weighted_median_histogram_matches_window(spark):
         for _ in range(n):
             v = None if rnd.random() < 0.08 else rnd.randrange(-50, 50)
             rows.append((g, v, rnd.randrange(0, 5)))
-    # a group whose weight mass sits entirely on NULL values (null-bucket
-    # crossing -> min non-null answer path)
+    # a group whose weight mass sits entirely on NULL values (min non-null
+    # answer path)
     rows += [("nulls", None, 10), ("nulls", 3, 1), ("nulls", 7, 1)]
     df = spark.createDataFrame(rows, "g string, v long, w long")
-    for impl in (weighted_median, weighted_median_histogram):
-        got = sorted(map(tuple, impl(df, ["g"], "v", "w").collect()))
-        want = sorted(map(tuple, _window_weighted_median(df, ["g"], "v", "w").collect()))
-        assert got == want, impl.__name__
-    # tiny bucket width exercises multi-bucket crossings on small domains
-    got = sorted(
-        map(
-            tuple,
-            weighted_median_histogram(df, ["g"], "v", "w", bucket_bits=2).collect(),
-        )
-    )
-    assert got == sorted(map(tuple, _window_weighted_median(df, ["g"], "v", "w").collect()))
+    got = sorted(map(tuple, weighted_median(df, ["g"], "v", "w").collect()))
+    want = sorted(map(tuple, _window_weighted_median(df, ["g"], "v", "w").collect()))
+    assert got == want
 
 
 def test_jaccard_pairs_dedup_after_verify_matches_brute(spark):
